@@ -346,10 +346,9 @@ def main() -> None:
             ).count()
 
         # reps=2: at reps=1 this row read 125.5 s in the r6 artifact
-        # while the dedicated interleaved measurement of the SAME job
-        # (scripts/bench_ivf_transport.py 200000 2, quiet launch) put
-        # the join transport at 36.3 s — single-rep session-state
-        # inflation, the exact failure mode min-of-reps exists for.
+        # while a dedicated interleaved re-run of the SAME job (quiet
+        # launch) read 36.3 s — single-rep session-state inflation,
+        # the exact failure mode min-of-reps exists for.
         run("ann_ivf_gen_10x", ann_ivf_gen10, reps=2)
 
     # --- headline tail placement (noise hardening, VERDICT r3 #7):

@@ -133,6 +133,10 @@ class TestKnnAndTextEdges:
         empty = spark.createDataFrame([], "vec_id long, label long, embedding array<float>")
         assert ann_lsh_topk(empty).count() == 0
         assert ann_ivf_topk(empty).count() == 0
+        import pytest
+
+        with pytest.raises(ValueError, match="centroids is empty"):
+            ann_ivf_topk(empty, centroids=[])
 
 
 class TestR6JoinPlotRegressions:

@@ -230,46 +230,34 @@ class TestAnnIvf:
             assert len(sims) <= 3
             assert sims == sorted(sims, reverse=True)
 
-    def test_probe_transports_identical(self, spark, sf_dir):
-        """The closure (r7 default: fused assign+score kernel, numpy
-        probe ranking, matrices in the task closure), join and
-        broadcast probe transports must produce identical rows — same
-        matrices, same ordered folds, only the shipping (and the
-        closure form's quantum-safe in-kernel top-k prune, a provable
-        superset cut) differs."""
-        from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import ann_ivf_topk
-
-        emb = D.load(spark, sf_dir, "embeddings")
-        key = lambda r: (r["probe_id"], r["neighbor_id"], r["list_id"], r["cos_sim"])
-        jn = sorted(key(r) for r in ann_ivf_topk(emb, probe_transport="join").collect())
-        cl = sorted(key(r) for r in ann_ivf_topk(emb, probe_transport="closure").collect())
-        assert jn == cl and jn
-        # closure + expr assignment: the non-fused closure branch
-        ce = sorted(
-            key(r)
-            for r in ann_ivf_topk(
-                emb, probe_transport="closure", assign_transport="expr"
-            ).collect()
-        )
-        assert jn == ce
-        bcast_df = ann_ivf_topk(emb, probe_transport="broadcast")
-        bc = sorted(key(r) for r in bcast_df.collect())
-        bcast_df.probes_bc.destroy()
-        assert jn == bc
-
     def test_transports_agree_on_degenerate_rows(self, spark, sf_dir):
-        """r7 review guards: a NULL embedding row must be SKIPPED (not
-        crash np.vstack) by every kernel, and a zero-norm vector's NaN
-        cosine must survive the closure path's top-k prune exactly as
-        the unfused kernels emit it (Spark ranks NaN first under desc,
-        so silently dropping it would diverge the transports)."""
-        import math
-
+        """Degenerate rows on the one IVF path match the DuckDB twin. A
+        NULL embedding (vec 7) is skipped, never a probe or a neighbor.
+        A zero vector's 0/0 cosine (vec 11) is NULL in both engines
+        (the kernel's NaN crosses Arrow as NULL) and ranks last. The
+        kernel's top-k prune keeps such a row where fewer than k real
+        candidates exist, without pushing a real one out — the tiny
+        one-batch corpus holds the probe, a zero vector and one real
+        vector."""
+        import duckdb
         from pyspark.sql import functions as F
 
         from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import ann_ivf_topk
+        from util_gis_spark.operators.ann import ann_ivf_topk, ann_ivf_topk_sql
+
+        def key(probe, neighbor, cos, list_id):
+            return (int(probe), int(neighbor), cos, int(list_id))
+
+        def twin(view_sql, **kw):
+            con = duckdb.connect()
+            con.execute(f"CREATE VIEW embeddings AS {view_sql}")
+            return {key(*r) for r in con.execute(ann_ivf_topk_sql(**kw)).fetchall()}
+
+        def engine(df, **kw):
+            return {
+                key(r["probe_id"], r["neighbor_id"], r["cos_sim"], r["list_id"])
+                for r in ann_ivf_topk(df, **kw).collect()
+            }
 
         emb = D.load(spark, sf_dir, "embeddings")
         dim = len(emb.select("embedding").first()["embedding"])
@@ -282,101 +270,94 @@ class TestAnnIvf:
             )
             .otherwise(F.col("embedding").cast("array<double>")),
         )
-        key = lambda r: (
-            r["probe_id"],
-            r["neighbor_id"],
-            r["list_id"],
-            "nan" if (r["cos_sim"] is not None and math.isnan(r["cos_sim"])) else r["cos_sim"],
+        got = engine(dirty, probe_filter="vec_id % 10 = 0")
+        assert got == twin(
+            "SELECT vec_id, label, CASE WHEN vec_id = 7 THEN NULL "
+            "WHEN vec_id = 11 THEN list_transform(embedding, x -> 0.0::FLOAT) "
+            f"ELSE embedding END AS embedding FROM read_parquet('{sf_dir}/embeddings.parquet')",
+            probe_filter="vec_id % 10 = 0",
         )
-        jn = sorted(key(r) for r in ann_ivf_topk(dirty, probe_transport="join").collect())
-        cl = sorted(key(r) for r in ann_ivf_topk(dirty, probe_transport="closure").collect())
-        assert jn == cl and jn
+        assert got and all(7 not in (p, n) for p, n, _c, _l in got)
 
-    def test_probe_transport_validated(self, spark, sf_dir):
-        import pytest
+        tiny = spark.createDataFrame(
+            [(1, 0, [1.0, 0.0]), (2, 0, [0.0, 0.0]), (3, 0, [0.6, 0.8])],
+            "vec_id long, label int, embedding array<double>",
+        ).coalesce(1)
+        got = engine(tiny, probe_filter="vec_id = 1", k=3)
+        assert got == {(1, 2, None, 0), (1, 3, 0.6, 0)}
+        assert got == twin(
+            "SELECT * FROM (VALUES (1, 0, [1.0, 0.0]), (2, 0, [0.0, 0.0]), "
+            "(3, 0, [0.6, 0.8])) t(vec_id, label, embedding)",
+            probe_filter="vec_id = 1",
+            k=3,
+        )
+
+    def test_nan_centroid_matches_duckdb_twin(self, spark, sf_dir):
+        """One NaN component in one corpus vector makes its label's
+        centroid NaN, so every dot with that centroid is NaN. Spark and
+        DuckDB rank NaN first under DESC: every vector is assigned to
+        that list, and every probe must rank it among its nprobe lists
+        — else the probes scan only lists left empty."""
+        import math
+
+        import duckdb
+        from pyspark.sql import functions as F
 
         from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import ann_ivf_topk
+        from util_gis_spark.operators.ann import ann_ivf_topk, ann_ivf_topk_sql
 
-        with pytest.raises(ValueError, match="probe_transport"):
-            ann_ivf_topk(D.load(spark, sf_dir, "embeddings"), probe_transport="carrier-pigeon")
-        with pytest.raises(ValueError, match="assign_transport"):
-            ann_ivf_topk(D.load(spark, sf_dir, "embeddings"), assign_transport="osmosis")
+        dirty = D.load(spark, sf_dir, "embeddings").withColumn(
+            "embedding",
+            F.when(
+                F.col("vec_id") == 13,
+                F.concat(
+                    F.array(F.lit(float("nan")).cast("float")),
+                    F.expr("slice(embedding, 2, size(embedding) - 1)"),
+                ),
+            ).otherwise(F.col("embedding")),
+        )
 
-    def test_assign_transports_identical(self, spark, sf_dir):
-        """The Arrow argmax assignment kernel must be BIT-IDENTICAL to
-        the literal greatest() expression form end-to-end: same
-        ascending-d fold, same first-max == smaller-list_id tie-break,
-        so every (probe, neighbor, cos, list) row matches exactly."""
-        from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import ann_ivf_topk
+        def key(probe, neighbor, cos, list_id):
+            return (int(probe), int(neighbor), "nan" if math.isnan(cos) else cos, int(list_id))
 
-        emb = D.load(spark, sf_dir, "embeddings")
-        key = lambda r: (r["probe_id"], r["neighbor_id"], r["cos_sim"], r["list_id"])
-        ex = sorted(key(r) for r in ann_ivf_topk(emb, assign_transport="expr").collect())
-        kr = sorted(key(r) for r in ann_ivf_topk(emb, assign_transport="kernel").collect())
-        assert ex == kr and ex
+        got = {
+            key(r["probe_id"], r["neighbor_id"], r["cos_sim"], r["list_id"])
+            for r in ann_ivf_topk(dirty).collect()
+        }
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW embeddings AS SELECT vec_id, label, CASE WHEN vec_id = 13 "
+            "THEN list_concat(['nan'::FLOAT], embedding[2:]) ELSE embedding END AS embedding "
+            f"FROM read_parquet('{sf_dir}/embeddings.parquet')"
+        )
+        want = {key(*r) for r in con.execute(ann_ivf_topk_sql()).fetchall()}
+        assert got == want and got
 
-    def test_assign_auto_switches_to_kernel_beyond_expr_cap(self, spark, sf_dir):
-        """Past _ASSIGN_EXPR_MAX_TERMS (lists x dim) 'auto' must route
-        to the kernel (the expression form's Janino compile is the
-        thing being avoided — it OOMs a 48 GiB driver at 300 lists x
-        64 dims — so the test never builds it at this size) and the
-        assignment must match an independent numpy replica of the
-        ordered-fold argmax."""
+    def test_closure_payload_cap_refuses(self, spark, sf_dir, monkeypatch):
+        """Past IVF_CLOSURE_MAX_BYTES of per-list probe matrices (probe
+        rows x lists probed x (8 x dim + 8) B) the call refuses and
+        names the way out, on the label-mean path (checked after the
+        one probe collect) and on the explicit-centroids path (the
+        probe transfer itself is capped)."""
         import numpy as np
 
         from util_gis_spark import datasets as D
-        from util_gis_spark.operators.ann import (
-            _ASSIGN_EXPR_MAX_TERMS,
-            _assign_kernel,
-            ann_ivf_topk,
-        )
+        from util_gis_spark.operators import ann
 
         emb = D.load(spark, sf_dir, "embeddings")
-        dim = len(emb.select("embedding").first()["embedding"])
-        n_lists = _ASSIGN_EXPR_MAX_TERMS // dim + 44
-        rng = np.random.default_rng(11)
+        rng = np.random.default_rng(5)
         cents = []
-        for j in range(n_lists):
-            c = rng.standard_normal(dim)
+        for j in range(8):
+            c = rng.standard_normal(64)
             cents.append((j, (c / np.linalg.norm(c)).tolist()))
-
-        e = emb.selectExpr("vec_id", "CAST(embedding AS array<double>) AS v")
-        got = {
-            (r["vec_id"], r["list_id"]) for r in _assign_kernel(e, cents).collect()
-        }
-        pdf = e.orderBy("vec_id").toPandas()
-        C = np.array([c for _j, c in cents])
-        want = set()
-        for vid, v in zip(pdf["vec_id"], pdf["v"]):
-            V = np.asarray(v, dtype=np.float64)
-            dot = np.zeros(n_lists)
-            for d in range(dim):  # same ordered fold as expr/kernel
-                dot = dot + V[d] * C[:, d]
-            want.add((int(vid), int(np.argmax(dot))))
-        assert got == want and len(got) > 0
-
-        # auto == explicit kernel end-to-end at this list count
-        key = lambda r: (r["probe_id"], r["neighbor_id"], r["cos_sim"], r["list_id"])
-        auto = sorted(
-            key(r)
-            for r in ann_ivf_topk(emb, centroids=cents, nprobe=5).collect()
-        )
-        kern = sorted(
-            key(r)
-            for r in ann_ivf_topk(
-                emb, centroids=cents, nprobe=5, assign_transport="kernel"
-            ).collect()
-        )
-        assert auto == kern and auto
-
-        # explicit expr past the cap must REFUSE (the compile is a
-        # measured OOM cliff), not attempt the build
-        import pytest
-
-        with pytest.raises(ValueError, match="unrolled terms"):
-            ann_ivf_topk(emb, centroids=cents, assign_transport="expr")
+        # 5 probes x 3 lists x (8 x 64 + 8) B = 7,800 B
+        monkeypatch.setattr(ann, "IVF_CLOSURE_MAX_BYTES", 7_800)
+        assert ann.ann_ivf_topk(emb).count() > 0
+        assert ann.ann_ivf_topk(emb, centroids=cents).count() > 0
+        for kw in ({}, {"centroids": cents}):
+            # one more probe: 6 x 1,560 B = 9,360 B
+            with pytest.raises(ValueError, match="9360 B.*narrow probe_filter.*embed_topk_blocked"):
+                ann.ann_ivf_topk(emb, probe_filter="vec_id % 100 = 0 OR vec_id = 1", **kw)
 
 
 class TestResPlanner:
@@ -483,9 +464,6 @@ class TestResPlanner:
         flavors = {
             "broadcast": joins.pip_join_broadcast(pts, polys, carry_cols=["image_key"]),
             "hybrid_jvm": joins.pip_join_hybrid(pts, polys, res=8, carry_cols=["image_key"]),
-            "hybrid_arrow": joins.pip_join_hybrid(
-                pts, polys, res=8, carry_cols=["image_key"], refine="arrow"
-            ),
             "cells": joins.pip_join_cells(pts, polys, res=8, carry_cols=["image_key"]),
         }
         for name, df in flavors.items():
@@ -907,10 +885,12 @@ class TestKnnIndexHandle:
 
 class TestIvfKmeans:
     def test_kmeans_ivf_matches_numpy_replica(self, spark, sf_dir):
-        """ann_ivf_topk with the sampled-k-means quantizer must equal a
+        """ann_ivf_topk with an explicit quantizer must equal a
         straight-line numpy replica of the whole search (same
         centroids -> same assignment tie-breaks -> same nprobe lists
-        -> same exact re-rank) row for row."""
+        -> same exact re-rank) row for row: the sampled-k-means one,
+        and 76 random unit centroids (many lists of a few members
+        each)."""
         import duckdb
         import numpy as np
 
@@ -918,14 +898,8 @@ class TestIvfKmeans:
         from util_gis_spark.operators.ann import ann_ivf_topk, kmeans_centroids
 
         emb = D.load(spark, sf_dir, "embeddings")
-        cents = kmeans_centroids(emb, k=8, iters=5)
-        assert len(cents) == 8
-        got = {
-            (r["probe_id"], r["neighbor_id"], r["cos_sim"], r["list_id"])
-            for r in ann_ivf_topk(
-                emb, probe_filter="vec_id % 10 = 0", nprobe=3, centroids=cents
-            ).collect()
-        }
+        kmeans = kmeans_centroids(emb, k=8, iters=5)
+        assert len(kmeans) == 8
 
         df = duckdb.connect().execute(
             f"SELECT vec_id, embedding::DOUBLE[] AS v "
@@ -933,31 +907,46 @@ class TestIvfKmeans:
         ).df()
         ids = df["vec_id"].to_numpy(np.int64)
         m = np.stack(df["v"].to_numpy())
-        C = np.stack([np.asarray(c) for _i, c in cents])
-        dots = m @ C.T
-        # engine tie-break: dot desc, list_id asc -> argmax keeps first max
-        order = np.argsort(-dots, axis=1, kind="stable")
-        assign = order[:, 0]
-        want = set()
         mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-        for i, pid in enumerate(ids):
-            if pid % 10 != 0:
-                continue
-            probe_lists = set(order[i, :3])
-            cand = [
-                j
-                for j in range(len(ids))
-                if assign[j] in probe_lists and ids[j] != pid
-            ]
-            scored = sorted(
-                (
-                    (-round(float(mn[i] @ mn[j]), 5), int(ids[j]), int(assign[j]))
-                    for j in cand
-                ),
-            )[:3]
-            for negcos, nid, lid in scored:
-                want.add((int(pid), nid, -negcos, lid))
-        assert got == want and len(got) > 0
+        rng = np.random.default_rng(11)
+        random76 = []
+        for j in range(76):
+            c = rng.standard_normal(m.shape[1])
+            random76.append((j, (c / np.linalg.norm(c)).tolist()))
+
+        for cents in (kmeans, random76):
+            got = {
+                (r["probe_id"], r["neighbor_id"], r["cos_sim"], r["list_id"])
+                for r in ann_ivf_topk(
+                    emb, probe_filter="vec_id % 10 = 0", nprobe=3, centroids=cents
+                ).collect()
+            }
+            C = np.stack([np.asarray(c) for _i, c in cents])
+            dots = np.zeros((len(m), len(C)))
+            for d in range(m.shape[1]):  # the engine's ascending-d fold
+                dots = dots + m[:, d, None] * C[None, :, d]
+            # engine tie-break: dot desc, list_id asc -> argmax keeps first max
+            order = np.argsort(-dots, axis=1, kind="stable")
+            assign = order[:, 0]
+            want = set()
+            for i, pid in enumerate(ids):
+                if pid % 10 != 0:
+                    continue
+                probe_lists = set(order[i, :3])
+                cand = [
+                    j
+                    for j in range(len(ids))
+                    if assign[j] in probe_lists and ids[j] != pid
+                ]
+                scored = sorted(
+                    (
+                        (-round(float(mn[i] @ mn[j]), 5), int(ids[j]), int(assign[j]))
+                        for j in cand
+                    ),
+                )[:3]
+                for negcos, nid, lid in scored:
+                    want.add((int(pid), nid, -negcos, lid))
+            assert got == want and len(got) > 0
 
     def test_lsh_signature_kernel_matches_column_form(self, spark, sf_dir):
         """The r5 Arrow signature kernel must be BIT-IDENTICAL to the
