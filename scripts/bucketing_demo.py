@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from util_gis_spark import datasets as D
 from util_gis_spark.geo.cells import cell_expr
-from util_gis_spark.operators.joins import polygon_cover_cells
+from util_gis_spark.operators.joins import polygon_cells_classified
 from util_gis_spark.session import get_spark
 
 WAREHOUSE = "/tmp/util_gis_warehouse"
@@ -44,7 +44,7 @@ def main() -> None:
     images = D.images_range(spark, 1_000_000, 16).withColumn(
         "cell", cell_expr(F.col("lon"), F.col("lat"), 14)
     )
-    cellmap = polygon_cover_cells(D.polygons_wkt(spark, sf_dir), 14).select(
+    cellmap = polygon_cells_classified(D.polygons_wkt(spark, sf_dir), 14, with_edges=False).select(
         "cell", "polygon_id"
     )
 

@@ -72,9 +72,11 @@ def main() -> None:
             "edge arrays no longer duplicated per boundary cell through the "
             "exchange); (3) edges attach via a BroadcastHashJoin on "
             "polygon_id AFTER the cell join; (4) the polygon side's only "
-            "Python is the per-POLYGON classify + edges kernels (MapInPandas "
-            "on the 25-row side), never on fact rows; (5) the refine is the "
-            "higher-order-function ray cast inside the JVM Filter.",
+            "Python is the batched classify + edges kernels (MapInArrow on "
+            "the 25-row side: one numpy pass per Arrow batch, output rows "
+            "and edge lists built from numpy/Arrow arrays), never on fact "
+            "rows; (5) the refine is the higher-order-function ray cast "
+            "inside the JVM Filter.",
             cells_plan,
         )
     )
@@ -132,8 +134,9 @@ def main() -> None:
             "Verify: (1) pip_join detected > collect_threshold_polys via a "
             "bounded limit-count probe and returned pip_join_cells — NO "
             "driver-side classification loop; (2) the polygon layer's only "
-            "operators are its scan -> MapInPandas (executor-side cell "
-            "classification) -> Exchange on the cell key; (3) the fact side "
+            "operators are its scan -> MapInArrow (executor-side cell "
+            "classification, one batched numpy pass per Arrow batch) -> "
+            "Exchange on the cell key; (3) the fact side "
             "shuffle-joins on cell; (4) refine is the JVM HOF ray cast.",
             planned_plan,
         )

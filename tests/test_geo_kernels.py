@@ -273,12 +273,13 @@ class TestR4GeoReviewRegressions:
         assert points_in_geom([2.0], [2.0], wkt)[0]
         assert len(wkt_to_4d_array(wkt)) == 1
 
-    def test_segment_cells_corner_stays_in_res(self):
+    def test_edge_cells_corner_stays_in_res(self):
         import numpy as np
 
-        from util_gis_spark.geo.cells import np_decode, segment_cells
+        from util_gis_spark.geo.cells import edge_cells, np_decode
 
-        cells = segment_cells(-180.0, -45.0, -181.0, -46.0, 2)
+        _e, cells = edge_cells(-180.0, -45.0, -181.0, -46.0, 2)
+        assert len(cells)
         for c in cells:
             res, ix, iy = np_decode(np.int64(c))
             assert int(res) == 2 and 0 <= int(ix) < 4 and 0 <= int(iy) < 4
@@ -372,14 +373,17 @@ class TestR5NumericCoreHardening:
         got = duckdb.connect().execute(f"SELECT {mu_sql(repr(area))}").fetchone()[0]
         assert got == calc_mu(area) == 0.0005
 
-    def test_segment_cells_out_of_range_is_conservative(self):
-        # clamped-path cells must be a subset of what we now return
-        full = cells.segment_cells(170.0, 85.0, 200.0, 95.0, 8)
-        clamped = cells.segment_cells(170.0, 85.0, 180.0, 90.0, 8)
+    def test_edge_cells_out_of_range_is_conservative(self):
+        # an out-of-domain endpoint covers the clamped bbox, so the
+        # clamped segment's cells are a subset of what it returns
+        full = set(cells.edge_cells(170.0, 85.0, 200.0, 95.0, 8)[1].tolist())
+        clamped = set(cells.edge_cells(170.0, 85.0, 180.0, 90.0, 8)[1].tolist())
         assert clamped <= full
+        assert full == set(cells.cover_bbox(170.0, 85.0, 200.0, 95.0, 8).tolist())
 
-    def test_segment_cells_nan_degrades_empty(self):
-        assert cells.segment_cells(float("nan"), 0.0, 1.0, 1.0, 8) == set()
+    def test_edge_cells_nan_degrades_empty(self):
+        e, c = cells.edge_cells([float("nan"), 0.0], [0.0, 0.0], [1.0, 1.0], [1.0, 1.0], 8)
+        assert 0 not in e.tolist() and len(c) > 0  # only the finite edge has cells
 
     def test_cover_bbox_antimeridian_wraps(self):
         cov = cells.cover_bbox(179.0, 0.0, -179.0, 1.0, 8)

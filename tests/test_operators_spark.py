@@ -119,18 +119,78 @@ class TestSpatialJoins:
         }
         assert a == b == c and len(a) > 0
 
-    def test_classify_cells_conservative(self, spark):
-        from util_gis_spark.geo.cells import cell_bounds
-        from util_gis_spark.geo.geometry import parse_wkt, points_in_geom
+    # valid shapes plus invalid ones whose union/parity semantics the
+    # classifier must not get ahead of: hole outside its shell,
+    # overlapping holes, a bow-tie, overlapping collection parts
+    CLASSIFY_WKTS = {
+        1: "POLYGON ((0 0, 10 0, 10 4, 4 4, 4 10, 0 10, 0 0))",  # L-shape, edges on grid lines
+        2: "POLYGON ((20 0, 30 0, 30 10, 20 10, 20 0), (33 2, 37 2, 37 6, 33 6, 33 2))",
+        3: "POLYGON ((40 0, 50 0, 50 10, 40 10, 40 0), (42 2, 46 2, 46 6, 42 6, 42 2), "
+           "(44 4, 48 4, 48 8, 44 8, 44 4))",
+        4: "POLYGON ((60 0, 70 10, 70 0, 60 10, 60 0))",
+        5: "GEOMETRYCOLLECTION (POLYGON ((80 0, 86 0, 86 6, 80 6, 80 0)), "
+           "POLYGON ((83 3, 89 3, 89 9, 83 9, 83 3)))",
+    }
 
-        # non-convex polygon: L-shape
-        parsed = parse_wkt("POLYGON ((0 0, 10 0, 10 4, 4 4, 4 10, 0 10, 0 0))")
-        inside, boundary = joins.classify_polygon_cells(parsed, 8)
-        # every cell classified inside must have its center truly inside
-        for c in inside:
-            x0, y0, x1, y1 = cell_bounds(int(c))
-            assert points_in_geom([(x0 + x1) / 2], [(y0 + y1) / 2], parsed)[0]
-        assert len(boundary) > 0
+    def test_classify_cells_conservative(self, spark):
+        """Every point of every inside cell — a 5x5 lattice over the
+        closed cell, corners included — passes the refine predicate
+        (raycast_inside_expr), on valid and invalid polygons alike."""
+        import numpy as np
+        import pandas as pd
+
+        from util_gis_spark.geo import cells
+        from util_gis_spark.geo.geometry import parse_wkt
+
+        ids = list(self.CLASSIFY_WKTS)
+        res = 8
+        poly, cell, inside = cells.classify_cells([parse_wkt(self.CLASSIFY_WKTS[i]) for i in ids], res)
+        assert (~inside).any()
+        assert {ids[g] for g in np.unique(poly[inside])} == set(ids)  # the fast accept fires on each
+        _, ix, iy = cells.np_decode(cell[inside])
+        n = 1 << res
+        t = np.linspace(0.0, 1.0, 5)
+        gx = (-180.0 + (ix[:, None, None] + t[None, :, None]) * 360.0 / n) + 0 * t[None, None, :]
+        gy = (-90.0 + (iy[:, None, None] + t[None, None, :]) * 180.0 / n) + 0 * t[None, :, None]
+        pid = np.repeat(np.array(ids)[poly[inside]], 25)
+        pts = spark.createDataFrame(
+            pd.DataFrame({"polygon_id": pid, "lon": gx.ravel(), "lat": gy.ravel()})
+        )
+        polys = spark.createDataFrame(list(self.CLASSIFY_WKTS.items()), "polygon_id long, wkt string")
+        j = pts.join(F.broadcast(joins.polygon_edges_table(polys)), "polygon_id")
+        failed = j.filter(~joins.raycast_inside_expr(F.col("lon"), F.col("lat"), F.col("_edges")))
+        assert j.count() == len(pid)
+        assert failed.count() == 0, failed.limit(5).collect()
+
+    def test_cell_flavors_match_refine_only_on_invalid_polygons(self, spark):
+        """pip_join_hybrid and pip_join_cells (both edge attachments)
+        return exactly the rows of refining EVERY point against every
+        polygon with raycast_inside_expr, on a point lattice that also
+        hits cell corners and edges."""
+        import numpy as np
+
+        polys = spark.createDataFrame(list(self.CLASSIFY_WKTS.items()), "polygon_id long, wkt string")
+        step = 360.0 / (1 << 8) / 4  # four lattice points per res-8 cell width
+        xs = -180.0 + np.arange(int(180.0 / step), int(270.0 / step)) * step
+        ys = -90.0 + np.arange(int(89.0 / (step / 2)), int(101.0 / (step / 2))) * (step / 2)
+        lon, lat = np.meshgrid(xs, ys)
+        rows = list(zip(range(lon.size), lon.ravel().tolist(), lat.ravel().tolist()))
+        pts = spark.createDataFrame(rows, "image_key long, lon double, lat double")
+        ref = pts.crossJoin(F.broadcast(joins.polygon_edges_table(polys))).filter(
+            joins.raycast_inside_expr(F.col("lon"), F.col("lat"), F.col("_edges"))
+        )
+        want = {(r["image_key"], r["polygon_id"]) for r in ref.collect()}
+        assert len({p for _k, p in want}) == len(self.CLASSIFY_WKTS)
+        flavors = {
+            "hybrid": joins.pip_join_hybrid(pts, polys, res=8, carry_cols=["image_key"]),
+            "cells_inline": joins.pip_join_cells(pts, polys, res=8, carry_cols=["image_key"]),
+            "cells_broadcast": joins.pip_join_cells(
+                pts, polys, res=8, carry_cols=["image_key"], attach_edges="broadcast"
+            ),
+        }
+        for name, df in flavors.items():
+            got = {(r["image_key"], r["polygon_id"]) for r in df.collect()}
+            assert got == want, f"{name}: {len(got ^ want)} rows differ"
 
     def test_images_range_equals_images_scaled(self, spark, sf_dir):
         a = D.images_scaled(spark, sf_dir, 3).select("image_key", "lon", "lat", "w", "h")
@@ -181,6 +241,38 @@ class TestSpatialJoins:
 
         tiles = {r["tile"] for r in out}
         assert int(np_cell(116.2, 39.7, 16)) in tiles
+
+
+class TestGroupedApply:
+    def test_keyed_kernel_infers_grouped_map_without_warning(self, spark, monkeypatch):
+        """A (key, pdf) grouped kernel is fully annotated: PySpark infers
+        the grouped-map eval type from its hints (the type it fell back
+        to before) and emits no 'Cannot infer the eval type' warning."""
+        import warnings
+
+        from pyspark.sql.pandas import typehints
+        from pyspark.util import PythonEvalType
+
+        from util_gis_spark.operators.geometry_ops import merge_wkts_agg
+
+        seen = []
+        infer = typehints.infer_group_pandas_eval_type_from_func
+
+        def spy(f):
+            seen.append(infer(f))
+            return seen[-1]
+
+        monkeypatch.setattr(typehints, "infer_group_pandas_eval_type_from_func", spy)
+        df = spark.createDataFrame(
+            [(1, "POLYGON ((116 39, 116.01 39, 116.01 39.01, 116 39.01, 116 39))")],
+            "gid long, wkt string",
+        )
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            out = merge_wkts_agg(df, ["gid"])
+        assert seen == [PythonEvalType.SQL_GROUPED_MAP_PANDAS_UDF]
+        assert "FlatMapGroupsInPandas" in out._jdf.queryExecution().executedPlan().toString()
+        assert [r["gid"] for r in out.collect()] == [1]
 
 
 class TestSqlApi:
@@ -512,8 +604,8 @@ class TestResPlanner:
 
         auto = joins.pip_join(pts_df, pdf, res=13, carry_cols=["image_key"])
         # mechanism: the distributed path classifies polygons executor-side
-        # (MapInPandas in the plan); the broadcast hybrid has no Python op
-        assert "MapInPandas" in auto._jdf.queryExecution().executedPlan().toString()
+        # (MapInArrow in the plan); the broadcast hybrid has no Python op
+        assert "MapInArrow" in auto._jdf.queryExecution().executedPlan().toString()
         got = {(r["image_key"], r["polygon_id"]) for r in auto.collect()}
         want = {
             (r["image_key"], r["polygon_id"])

@@ -12,6 +12,7 @@ UDFs. Semantics follow the reference (GisUtil):
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 import numpy as np
 
@@ -61,6 +62,69 @@ def geom_polys(parsed) -> list:
             out.extend(geom_polys(sub))
         return out
     return []
+
+
+class EdgeTable(NamedTuple):
+    """Flat ring-edge table of a batch of geometries (see flat_edges)."""
+
+    poly: np.ndarray  # geometry index of each edge
+    part: np.ndarray  # batch-wide polygonal part id of each edge
+    x1: np.ndarray
+    y1: np.ndarray
+    x2: np.ndarray
+    y2: np.ndarray
+    part_poly: np.ndarray  # geometry index of each part id
+
+
+def flat_edges(parsed_list) -> EdgeTable:
+    """Every polygonal ring edge of a batch of parse_wkt results as ONE
+    flat table, ordered by geometry, part, ring, vertex. Rings are
+    closed as the ray casts read them; a ring of < 2 points has no edge
+    and a part without edges no part id. The ray cast ORs per-part
+    even-odd parity (union semantics for overlapping parts)."""
+    rings, ring_part, part_poly = [], [], []
+    for g, parsed in enumerate(parsed_list):
+        for part_rings in geom_polys(parsed):
+            kept = [r for r in part_rings if len(r) >= 2]
+            if kept:
+                rings.extend(kept)
+                ring_part.extend([len(part_poly)] * len(kept))
+                part_poly.append(g)
+    part_poly = np.asarray(part_poly, dtype=np.int64)
+    if not rings:
+        f = np.empty(0, dtype=np.float64)
+        return EdgeTable(np.empty(0, np.int64), np.empty(0, np.int64), f, f, f, f, part_poly)
+    lens = np.fromiter(map(len, rings), np.int64, len(rings))
+    pts = np.concatenate(rings).astype(np.float64, copy=False)
+    start = np.cumsum(lens) - lens
+    closed = (pts[start] == pts[start + lens - 1]).all(axis=1)
+    n_e = lens - closed
+    ring = np.repeat(np.arange(len(rings)), n_e)
+    t = np.arange(int(n_e.sum())) - np.repeat(np.cumsum(n_e) - n_e, n_e)
+    a = start[ring] + t
+    b = np.where(t + 1 < lens[ring], a + 1, start[ring])
+    part = np.asarray(ring_part, dtype=np.int64)[ring]
+    return EdgeTable(
+        part_poly[part], part, pts[a, 0], pts[a, 1], pts[b, 0], pts[b, 1], part_poly
+    )
+
+
+def edges_arrow(edges: EdgeTable, n_polys: int):
+    """Each of `n_polys` geometries' ray-cast payload (joins.EDGES_TYPE)
+    as ONE Arrow array built from flat_edges offsets; callers `take`
+    rows. Not in joins, so that Arrow workers never import pandas."""
+    import pyarrow as pa
+
+    coords = pa.StructArray.from_arrays(
+        [pa.array(edges.x1), pa.array(edges.y1), pa.array(edges.x2), pa.array(edges.y2)],
+        names=["x1", "y1", "x2", "y2"],
+    )
+
+    def offsets(owner, n):
+        return pa.array(np.concatenate([[0], np.cumsum(np.bincount(owner, minlength=n))]), pa.int32())
+
+    parts = pa.ListArray.from_arrays(offsets(edges.part, len(edges.part_poly)), coords)
+    return pa.ListArray.from_arrays(offsets(edges.part_poly, n_polys), parts)
 
 
 def _parse_paren_ring(part: str) -> np.ndarray:

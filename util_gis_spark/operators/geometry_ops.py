@@ -297,7 +297,7 @@ def resolve_conflicts_agg(
         ]
     )
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if sort_cols:
             pdf = pdf.sort_values(sort_cols).reset_index(drop=True)
         rows = np_resolve_conflicts(list(pdf[wkt_col]), order=order)
@@ -333,7 +333,7 @@ def mutual_difference_agg(
         ]
     )
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if sort_cols:
             pdf = pdf.sort_values(sort_cols).reset_index(drop=True)
         rows = np_mutual_difference(list(pdf[wkt_col]))
@@ -378,7 +378,7 @@ def merge_wkts_agg(df: DataFrame, group_cols: list[str], wkt_col: str = "wkt") -
         + [T.StructField("merged_wkt", T.StringType()), T.StructField("mu", T.DoubleType())]
     )
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         wkt, mu = np_merge_wkts(list(pdf[wkt_col]))
         row = {c: [k] for c, k in zip(group_cols, key)}
         row["merged_wkt"] = [wkt]

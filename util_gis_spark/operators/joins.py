@@ -19,6 +19,13 @@ distributed re-expression:
   JVM-side ray cast (higher-order aggregate over the polygon's edge
   array — no Python worker, no Arrow, ONE scan of the fact table).
   Salting for hot cells is available via `salt_buckets`.
+- **cell classification** (both cell flavors): one batched numpy
+  kernel, `cells.classify_cells`, labels every polygon of a batch in
+  one pass — flat edge table, conservative supercover for boundary
+  cells, per-lattice-row crossing parity for the corner test. The
+  shuffled flavor runs it once per Arrow batch in `mapInArrow` and
+  builds its rows and edge payloads (`geometry.edges_arrow`) from
+  numpy and Arrow arrays, with no per-polygon or per-cell Python loop.
 - **kNN join**: candidates broadcast, per-batch numpy brute force with
   envelope pre-cut — the set form of findClosestPointList; the
   progressive tolerance ladder (G:3503-3563) becomes an upper bound
@@ -34,12 +41,13 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geo import cells
-from ..geo.geometry import geom_envelope, parse_wkt, points_in_geom
+from ..geo.geometry import edges_arrow, flat_edges, geom_envelope, parse_wkt, points_in_geom
 from ..geo.sphere import np_haversine
 
 
@@ -121,53 +129,6 @@ def pip_join_broadcast(
     return points_df.mapInPandas(refine, schema=schema)
 
 
-# the shared flattener lives next to parse_wkt (r6 review: this module
-# and geometry_ops.py carried identical copies)
-from ..geo.geometry import geom_polys as _polys_from_parsed  # noqa: E402
-
-
-def _edge_parts_from_parsed(parsed) -> list[list[tuple[float, float, float, float]]]:
-    """Ring edges grouped BY POLYGONAL PART: one (x1, y1, x2, y2) list
-    per part, each flattening that part's exterior + hole rings.
-    Within a part, even-odd parity over its combined rings IS strict
-    polygon-with-holes containment; across parts the ray cast ORs the
-    per-part results (union semantics). r2 flattened ALL parts into one
-    parity test, which mis-excluded points covered by an even number of
-    OVERLAPPING collection parts (VERDICT r2 'What's missing' #4) —
-    valid MULTIPOLYGONs were unaffected, arbitrary user WKT was not."""
-    parts: list[list[tuple[float, float, float, float]]] = []
-    for rings in _polys_from_parsed(parsed):
-        edges: list[tuple[float, float, float, float]] = []
-        for ring in rings:
-            r = np.asarray(ring, dtype=np.float64)
-            if len(r) < 2:
-                continue
-            closed = bool((r[0] == r[-1]).all())
-            seq = r if closed else np.vstack([r, r[:1]])
-            for i in range(len(seq) - 1):
-                edges.append(
-                    (float(seq[i, 0]), float(seq[i, 1]), float(seq[i + 1, 0]), float(seq[i + 1, 1]))
-                )
-        if edges:
-            parts.append(edges)
-    return parts
-
-
-def _edge_count_from_parsed(parsed) -> int:
-    """Total refine-edge count WITHOUT materializing the per-edge tuple
-    lists — the pip_join planner only needs the count for its bytes
-    estimate (r5 review: it used to allocate ~2M tuples at 4k polygons
-    x 500 vertices just to multiply by 32)."""
-    n = 0
-    for rings in _polys_from_parsed(parsed):
-        for ring in rings:
-            r = np.asarray(ring, dtype=np.float64)
-            if len(r) < 2:
-                continue
-            n += len(r) - 1 if bool((r[0] == r[-1]).all()) else len(r)
-    return n
-
-
 EDGES_TYPE = T.ArrayType(  # array of parts, each an edge array
     T.ArrayType(
         T.StructType(
@@ -179,6 +140,9 @@ EDGES_TYPE = T.ArrayType(  # array of parts, each an edge array
             ]
         )
     )
+)
+EDGES_SCHEMA = T.StructType(
+    [T.StructField("polygon_id", T.LongType()), T.StructField("_edges", EDGES_TYPE)]
 )
 
 
@@ -221,42 +185,6 @@ def raycast_inside_expr(px, py, parts):
     return F.exists(parts, _part_inside)
 
 
-def classify_polygon_cells(parsed, res: int) -> tuple[np.ndarray, np.ndarray]:
-    """Partition a polygon's covering cells into (fully_inside,
-    boundary) at resolution `res`. A cell is fully inside iff no ring
-    edge passes through it (grid supercover) and all 4 of its corners
-    are strictly inside — then every point in the cell is inside
-    (Jordan curve), so the join can accept it JVM-side with no exact
-    test. Everything else overlapping the envelope is `boundary` and
-    goes to the vectorized ray-cast refine. Conservative by
-    construction: misclassification can only move cells from `inside`
-    to `boundary` (costing speed, never correctness)."""
-    env = geom_envelope(parsed)
-    if env is None:
-        return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-    cover = cells.cover_bbox(*env, res)
-    polys = _polys_from_parsed(parsed)
-    edge_cells: set[int] = set()
-    for rings in polys:
-        for ring in rings:
-            r = np.asarray(ring, dtype=np.float64)
-            for i in range(len(r) - 1):
-                edge_cells |= cells.segment_cells(r[i, 0], r[i, 1], r[i + 1, 0], r[i + 1, 1], res)
-    is_edge = np.isin(cover, np.fromiter(edge_cells, dtype=np.int64, count=len(edge_cells)))
-    # corner test for non-edge cells
-    resv, ix, iy = cells.np_decode(cover)
-    n = 1 << res
-    w, h = 360.0 / n, 180.0 / n
-    x0 = -180.0 + ix * w
-    y0 = -90.0 + iy * h
-    cx = np.concatenate([x0, x0 + w, x0 + w, x0])
-    cy = np.concatenate([y0, y0, y0 + h, y0 + h])
-    corner_in = points_in_geom(cx, cy, parsed).reshape(4, -1).all(axis=0)
-    inside = cover[~is_edge & corner_in]
-    boundary = cover[is_edge | (~is_edge & ~corner_in)]
-    return inside, boundary
-
-
 def pip_join_hybrid(
     points_df: DataFrame,
     polygons_wkt_df: DataFrame,
@@ -295,21 +223,10 @@ def pip_join_hybrid(
     spark = points_df.sparkSession
     polys = _collect_polygons(polygons_wkt_df)
 
-    cell_parts: list[np.ndarray] = []
-    pid_parts: list[np.ndarray] = []
-    inside_parts: list[np.ndarray] = []
-    edge_rows = []
-    for pid, parsed, _env in polys:
-        inside, boundary = classify_polygon_cells(parsed, res)
-        n_in, n_bd = len(inside), len(boundary)
-        if n_in + n_bd:
-            cell_parts.append(np.concatenate([inside, boundary]))
-            pid_parts.append(np.full(n_in + n_bd, int(pid), dtype=np.int64))
-            inside_parts.append(
-                np.concatenate([np.ones(n_in, dtype=bool), np.zeros(n_bd, dtype=bool)])
-            )
-        if n_bd:
-            edge_rows.append((int(pid), _edge_parts_from_parsed(parsed)))
+    parsed = [p for _pid, p, _env in polys]
+    pids = np.array([pid for pid, _p, _env in polys], dtype=np.int64)
+    edges = flat_edges(parsed)
+    poly_ix, cell, inside = cells.classify_cells(parsed, res, edges)
     # the cell map ships driver -> JVM as ONE Arrow table built from
     # numpy columns (r7): at fine resolutions it holds ~10^5 rows, and
     # materializing those as Python tuples for createDataFrame cost
@@ -322,14 +239,8 @@ def pip_join_hybrid(
             T.StructField("_inside", T.BooleanType(), False),
         ]
     )
-    if cell_parts:
-        cellmap_pdf = pd.DataFrame(
-            {
-                "cell": np.concatenate(cell_parts),
-                "polygon_id": np.concatenate(pid_parts),
-                "_inside": np.concatenate(inside_parts),
-            }
-        )
+    if len(cell):
+        cellmap_pdf = pd.DataFrame({"cell": cell, "polygon_id": pids[poly_ix], "_inside": inside})
         cellmap = spark.createDataFrame(cellmap_pdf, schema=cellmap_schema)
     else:
         cellmap = spark.createDataFrame([], cellmap_schema)
@@ -340,31 +251,17 @@ def pip_join_hybrid(
     cand = pts.join(cellmap, on="cell", how="inner")
     out_cols = [c for c in points_df.columns] + ["polygon_id"]
 
-    edges_df = spark.createDataFrame(
-        edge_rows,
-        T.StructType(
-            [T.StructField("polygon_id", T.LongType()), T.StructField("_edges", EDGES_TYPE)]
-        ),
+    # edges of the polygons with a boundary cell, as one Arrow table
+    bd = pa.array(np.unique(poly_ix[~inside]))
+    edges_tbl = pa.table(
+        {"polygon_id": pa.array(pids).take(bd), "_edges": edges_arrow(edges, len(parsed)).take(bd)}
     )
+    edges_df = spark.createDataFrame(edges_tbl, schema=EDGES_SCHEMA)
     j = cand.join(F.broadcast(edges_df), on="polygon_id", how="left")
     keep = F.when(F.col("_inside"), F.lit(True)).otherwise(
         raycast_inside_expr(F.col(lon_col), F.col(lat_col), F.col("_edges"))
     )
     return j.filter(keep).select(*out_cols)
-
-
-def polygon_cover_cells(polygons_wkt_df: DataFrame, res: int) -> DataFrame:
-    """Explode each polygon to the cells covering its envelope
-    (coarse cover; exact refine happens after the join)."""
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover(wkts: pd.Series) -> pd.Series:
-        out = []
-        for w in wkts:
-            env = geom_envelope(parse_wkt(w))
-            out.append([] if env is None else cells.cover_bbox(*env, res).tolist())
-        return pd.Series(out)
-
-    return polygons_wkt_df.withColumn("cell", F.explode(cover(F.col("wkt"))))
 
 
 def polygon_cells_classified(
@@ -373,13 +270,17 @@ def polygon_cells_classified(
     """(polygon_id, cell, _inside[, _edges]): every covering cell of
     each polygon, classified interior/boundary; with `with_edges`,
     boundary rows carry the polygon's per-part edge arrays (null on
-    interior rows — the downstream ray cast never runs there). The
-    classification runs once per POLYGON (the small-in-rows,
-    maybe-large-in-total side), so the per-point refine cost is paid
-    only where a cell truly straddles a boundary. With `with_edges`
-    the edge arrays are duplicated per boundary cell through the cell
-    shuffle; `with_edges=False` emits the narrow map for the
-    broadcast-edges join flavor (see pip_join_cells attach_edges)."""
+    interior rows — the downstream ray cast never runs there). Each
+    Arrow batch of polygons (the small-in-rows, maybe-large-in-total
+    side) is classified in ONE batched numpy pass,
+    `cells.classify_cell_chunks`, in work units of bounded size, and
+    each unit yields an Arrow batch built straight from the kernel's
+    arrays; the edge payload is an Arrow `take` of per-polygon edge
+    lists. The per-point refine cost is paid only where a cell truly
+    straddles a boundary. With `with_edges` the edge arrays are
+    duplicated per boundary cell through the cell shuffle;
+    `with_edges=False` emits the narrow map for the broadcast-edges
+    join flavor (see pip_join_cells attach_edges)."""
     fields = [
         T.StructField("polygon_id", T.LongType()),
         T.StructField("cell", T.LongType()),
@@ -389,55 +290,41 @@ def polygon_cells_classified(
         fields.append(T.StructField("_edges", EDGES_TYPE))
     out_schema = T.StructType(fields)
 
-    def classify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pids, cls, ins, eds = [], [], [], []
-            for pid, wkt in zip(pdf["polygon_id"], pdf["wkt"]):
-                parsed = parse_wkt(wkt)
-                inside, boundary = classify_polygon_cells(parsed, res)
-                edges = (
-                    [
-                        [{"x1": e[0], "y1": e[1], "x2": e[2], "y2": e[3]} for e in part]
-                        for part in _edge_parts_from_parsed(parsed)
-                    ]
-                    if (with_edges and len(boundary))
-                    else None
-                )
-                for c in inside:
-                    pids.append(pid); cls.append(int(c)); ins.append(True); eds.append(None)
-                for c in boundary:
-                    pids.append(pid); cls.append(int(c)); ins.append(False); eds.append(edges)
-            if pids:  # empty frames infer float64 cols, breaking the Arrow struct cast
-                data = {"polygon_id": pids, "cell": cls, "_inside": ins}
-                if with_edges:
-                    data["_edges"] = eds
-                yield pd.DataFrame(data)
+    def classify(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            parsed = [parse_wkt(w) for w in batch.column("wkt").to_pylist()]
+            edges = flat_edges(parsed)
+            per_poly = edges_arrow(edges, len(parsed)) if with_edges else None
+            for poly_ix, cell, inside in cells.classify_cell_chunks(parsed, res, edges):
+                pid = batch.column("polygon_id").take(pa.array(poly_ix)).cast(pa.int64())
+                cols = [pid, pa.array(cell), pa.array(inside)]
+                if with_edges:  # NULL on interior rows: the ray cast never runs there
+                    cols.append(per_poly.take(pa.array(poly_ix, mask=inside)))
+                yield pa.RecordBatch.from_arrays(cols, names=out_schema.names)
 
-    return polygons_wkt_df.select("polygon_id", "wkt").mapInPandas(classify, schema=out_schema)
+    return polygons_wkt_df.select("polygon_id", "wkt").mapInArrow(classify, schema=out_schema)
 
 
 def polygon_edges_table(polygons_wkt_df: DataFrame) -> DataFrame:
     """(polygon_id, _edges): ONE row per polygon with its per-part edge
-    arrays — the build side of the broadcast-edges refine join."""
-    out_schema = T.StructType(
-        [T.StructField("polygon_id", T.LongType()), T.StructField("_edges", EDGES_TYPE)]
-    )
+    arrays — the build side of the broadcast-edges refine join, built
+    per Arrow batch from the flat edge table."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pids, eds = [], []
-            for pid, wkt in zip(pdf["polygon_id"], pdf["wkt"]):
-                parts = [
-                    [{"x1": e[0], "y1": e[1], "x2": e[2], "y2": e[3]} for e in part]
-                    for part in _edge_parts_from_parsed(parse_wkt(wkt))
-                ]
-                if parts:
-                    pids.append(pid)
-                    eds.append(parts)
-            if pids:
-                yield pd.DataFrame({"polygon_id": pids, "_edges": eds})
+    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            parsed = [parse_wkt(w) for w in batch.column("wkt").to_pylist()]
+            edges = flat_edges(parsed)
+            keep = pa.array(np.unique(edges.part_poly))  # polygons with an edge
+            if len(keep):
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        batch.column("polygon_id").take(keep).cast(pa.int64()),
+                        edges_arrow(edges, len(parsed)).take(keep),
+                    ],
+                    names=EDGES_SCHEMA.names,
+                )
 
-    return polygons_wkt_df.select("polygon_id", "wkt").mapInPandas(build, schema=out_schema)
+    return polygons_wkt_df.select("polygon_id", "wkt").mapInArrow(build, schema=EDGES_SCHEMA)
 
 
 def pip_join_cells(
@@ -453,14 +340,14 @@ def pip_join_cells(
 ) -> DataFrame:
     """Inner PIP join, cell equi-join flavor (large-large path).
 
-    Shuffles both sides once on the cell key; AQE handles residual
-    skew; `salt_buckets > 0` additionally salts the point side and
-    explodes the polygon side x k for pathological hot cells.
+    Shuffles both sides once on the cell key (`salt_buckets > 0` salts
+    points and explodes polygons x k for hot cells; AQE handles the
+    rest). The polygon side is classified executor-side, one batched
+    numpy pass per Arrow batch (polygon_cells_classified, mapInArrow).
     After the join everything is JVM: interior-cell candidates are
-    accepted with no exact test (`_inside` fast path — the same
-    classification the hybrid flavor uses), boundary candidates go
-    through the higher-order-function ray cast. No Python touches the
-    fact rows at any point, and the fact table is scanned ONCE.
+    accepted with no exact test (the `_inside` fast path the hybrid
+    flavor shares), boundary candidates go through the higher-order-
+    function ray cast. The fact table is scanned ONCE, never in Python.
     `carry_cols`: explicit column pruning (see pip_join_broadcast).
 
     `attach_edges` controls how the refine's edge arrays reach the
@@ -730,7 +617,7 @@ def pip_join(
         est_cells += max((x1 - x0) / cell_w, 1.0) * max((y1 - y0) / cell_h, 1.0)
     if est_cells > broadcast_threshold_cells:
         # the layer is already collected: size the edge payload from it
-        n_edges = sum(_edge_count_from_parsed(parsed) for _p, parsed, _e in polys)
+        n_edges = len(flat_edges([parsed for _p, parsed, _e in polys]).x1)
         return _cells(res, "broadcast" if n_edges * 32 <= edges_cap else "inline")
     if kw.get("salt_buckets", 0):
         # salting exists to spread a hot shuffle key; the hybrid flavor

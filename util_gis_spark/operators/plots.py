@@ -469,7 +469,7 @@ def get_farm_plot(points_df: DataFrame, working_width: float) -> DataFrame:
     """DataFrame operator: one FarmPlot set per device (expects
     quality-filtered WGS84 points with device_id/ts/lon/lat)."""
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if key[0] is None:
             # a NULL device_id is not a device: emit no plots instead
             # of crashing the stage on np.int64(None) (r6 review; same
@@ -507,7 +507,7 @@ def split_road(points_df: DataFrame, working_width: float, **kw) -> DataFrame:
         # a full job run to surface as an executor TypeError
         raise TypeError(f"split_road: unknown option(s) {sorted(unknown)}")
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if key[0] is None:  # NULL device: no plots, never crash (r6 review)
             return _plots_to_pdf(0, [])
         xy, ts_s, zone = _traj_arrays(pdf)
